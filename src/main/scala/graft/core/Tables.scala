@@ -59,7 +59,7 @@ object Tables {
     * `parquet.nanosAsLong` behaves identically). Directories (a
     * partitioned table at cluster scale) fall back to Spark's
     * distributed inference, which also handles schema merge. */
-  private def footerSchema(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType =
+  private[graft] def footerSchema(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
       val conf = spark.sessionState.newHadoopConf()

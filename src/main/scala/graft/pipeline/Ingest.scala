@@ -6,8 +6,12 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
+
+import graft.sources.v2.ManifestFileIndex
 
 /** Landing-zone discovery, file-level schema validation and CSV scan
   * (reference O1/O5/O6/O15).
@@ -27,17 +31,23 @@ import org.apache.spark.sql.types._
   * schema named from its header, then projected+cast by name —
   * usually one group, so still one scan.
   *
-  * Scale: the header check reads one line per file, distributed; the
-  * per-group scan is a plain `csv(group: _*)` that Spark splits
-  * natively, replacing the reference's manual 50k-row chunking and
-  * 5-file batching (O3).
+  * Scale: ingest's file metadata costs no Spark job. The header
+  * check reads one line per file on the driver and records each
+  * valid file's size and mtime from the same open. Each header group's scan is then planned over exactly
+  * those entries, so nothing is listed again at planning (a plain
+  * `csv(paths: _*)` starts a parallel listing job above 32 paths).
+  * Spark still splits and schedules the scan natively, replacing the
+  * reference's manual 50k-row chunking and 5-file batching (O3).
   */
 object Ingest {
 
+  /** `fileStats` holds each valid file's (size, mtime) as the header
+    * check saw it; [[readCsv]] plans the scan from it. */
   final case class Discovery(
       valid: Seq[String],
       quarantined: Seq[String],
-      headers: Map[String, Seq[String]])
+      headers: Map[String, Seq[String]],
+      fileStats: Map[String, (Long, Long)] = Map.empty)
 
   /** List `*.csv` under the landing dir (reference
     * `check_for_files`, `cocoa_processing_dag.py:56-86`). */
@@ -61,70 +71,48 @@ object Ingest {
     else t
   }
 
-  /** One header line, cheaply: open, read the first line, close.
-    * The caller passes the SESSION's Hadoop conf (shipped via
-    * SerializableConfiguration on the executor path): a bare
+  /** One header line and the file's (size, mtime), cheaply: stat,
+    * open, read the first line, close. The status rides the open, so
+    * an object store answers both with one metadata request. The
+    * caller passes the SESSION's Hadoop conf: a bare
     * `new Configuration()` would drop every `spark.hadoop.*` setting —
     * object-store credentials, custom scheme bindings — and only
     * appears to work locally because Hadoop's FileSystem cache is
-    * keyed by scheme, not by conf. */
-  private def readHeaderLine(p: String, conf: Configuration): String =
+    * keyed by scheme, not by conf. An unreadable file yields an empty
+    * header, which quarantines it. */
+  private def readHeader(p: String, conf: Configuration): (String, Option[(Long, Long)]) =
     try {
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
-      val in = new BufferedReader(
-        new InputStreamReader(fs.open(path), StandardCharsets.UTF_8))
-      try Option(in.readLine()).getOrElse("")
-      finally in.close()
-    } catch { case _: Exception => "" }
-
-  /** Small listings are checked on the driver directly — a header
-    * read is one FS open + one line, and scheduling a Spark job for a
-    * handful of files costs more than the reads. Above this, go
-    * executor-side. */
-  private val driverHeaderCheckMax = 64
+      val st = fs.getFileStatus(path)
+      val in = new BufferedReader(new InputStreamReader(
+        fs.openFile(path).withFileStatus(st).build().get(), StandardCharsets.UTF_8))
+      val line = try Option(in.readLine()).getOrElse("") finally in.close()
+      (line, Some((st.getLen, st.getModificationTime)))
+    } catch { case _: Exception => ("", None) }
 
   /** Partition discovered files into header-valid vs quarantined.
-    * Headers are read one line per file, no full scan — driver-side
-    * for small listings, executor-side beyond
-    * [[driverHeaderCheckMax]] files. Missing required columns ⇒
-    * quarantine the whole file; extra columns and reordering are
-    * tolerated (the reference only checks the missing set,
-    * `cocoa_processing_dag.py:31-35,187-190`; its pandas reader binds
-    * by name). */
+    * Headers are read one line per file, no full scan, on the driver.
+    * Missing required columns ⇒ quarantine the whole file; extra
+    * columns and reordering are tolerated (the reference only checks
+    * the missing set, `cocoa_processing_dag.py:31-35,187-190`; its
+    * pandas reader binds by name). */
   def validateHeaders(spark: SparkSession, files: Seq[String]): Discovery = {
     if (files.isEmpty) return Discovery(Seq.empty, Seq.empty, Map.empty)
     val required = CocoaSchema.requiredColumns
-    val flagged =
-      if (files.size <= driverHeaderCheckMax) {
-        val conf = spark.sessionState.newHadoopConf()
-        files.toArray.map(p => (p, readHeaderLine(p, conf)))
-      } else {
-        // parallelize with explicit slices: one task per file
-        // (capped), no shuffle — repartition() would add an exchange
-        // stage just to spread a file list. The session conf rides
-        // along (SerializableConfiguration) so executor-side opens
-        // resolve the same schemes/credentials as the driver — and it
-        // is the SESSION-derived conf (newHadoopConf applies
-        // spark.conf-level fs settings), the same one the ≤64-file
-        // driver path uses, so behavior cannot change with file count.
-        val serConf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf())
-        spark.sparkContext
-          .parallelize(files, math.min(files.size, 256))
-          .map(p => (p, readHeaderLine(p, serConf.value)))
-          .collect()
-      }
-    val parsed = flagged.map { case (p, h) =>
-      (p, h.split(",", -1).map(cleanHeaderCell).toSeq)
+    val conf = spark.sessionState.newHadoopConf()
+    val parsed = files.map { p =>
+      val (h, stat) = readHeader(p, conf)
+      (p, h.split(",", -1).map(cleanHeaderCell).toSeq, stat)
     }
-    val (ok, bad) = parsed.partition { case (_, cols) =>
+    val (ok, bad) = parsed.partition { case (_, cols, _) =>
       (required -- cols.toSet).isEmpty
     }
     Discovery(
-      valid = ok.map(_._1).toSeq.sorted,
-      quarantined = bad.map(_._1).toSeq.sorted,
-      headers = ok.toMap)
+      valid = ok.map(_._1).sorted,
+      quarantined = bad.map(_._1).sorted,
+      headers = ok.map(f => f._1 -> f._2).toMap,
+      fileStats = ok.flatMap(f => f._3.map(f._1 -> _)).toMap)
   }
 
   /** Read the surviving files with BY-NAME column binding: group by
@@ -132,18 +120,35 @@ object Ingest {
     * in the file's own column order, project the required columns by
     * name and cast to the canonical types. Extra columns are dropped;
     * rows whose key fails to parse are removed (the reference's
-    * Postgres PK would reject them — `cocoa_processing_dag.py:159`). */
+    * Postgres PK would reject them — `cocoa_processing_dag.py:159`).
+    *
+    * Planning lists nothing and submits no Spark job: each group's
+    * scan runs over a fixed-entry index ([[ManifestFileIndex]], no
+    * stats, no partitions) built from the (path, size, mtime) the
+    * header check recorded. A valid file without a recorded entry (a
+    * hand-built [[Discovery]]) is stat'ed on the driver. A file that
+    * vanishes after validation fails its scan task loudly. */
   def readCsv(spark: SparkSession, disc: Discovery): DataFrame = {
     require(disc.valid.nonEmpty, "no valid files to read")
+    val conf = spark.sessionState.newHadoopConf()
+    def entry(p: String): (String, Long, Long) = {
+      val path = new Path(p)
+      val fs = path.getFileSystem(conf)
+      val (size, mtime) = disc.fileStats.getOrElse(p, {
+        val st = fs.getFileStatus(path)
+        (st.getLen, st.getModificationTime)
+      })
+      (fs.makeQualified(path).toString, size, mtime)
+    }
+    val csv = new CSVFileFormat
+    val options = Map("header" -> "true", "mode" -> "PERMISSIVE")
     val byHeader: Map[Seq[String], Seq[String]] =
       disc.valid.groupBy(p => disc.headers(p)).map { case (h, ps) => h -> ps.toSeq }
     val parts = byHeader.map { case (header, paths) =>
       val rawSchema = StructType(header.map(c => StructField(c, StringType, nullable = true)))
-      val raw = spark.read
-        .schema(rawSchema)
-        .option("header", "true")
-        .option("mode", "PERMISSIVE")
-        .csv(paths: _*)
+      val index = new ManifestFileIndex(spark, new Path(paths.head).getParent.toString,
+        paths.map(entry))
+      val raw = Bridge.ofFileIndex(spark, index, rawSchema, new StructType(), csv, options)
       // try_cast, not cast: under ANSI mode (Spark 4 default) a plain
       // cast THROWS on the first malformed value — one dirty cell
       // would poison the whole multi-file scan, the failure mode a

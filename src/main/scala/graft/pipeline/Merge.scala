@@ -76,17 +76,24 @@ object Merge {
     * Update columns align to the target's schema by name — missing
     * (pre-evolution) columns null-fill, extras drop ([[alignTo]]).
     *
-    * `broadcastKeys = true` (default) broadcasts the deduped update
-    * KEY SET into the anti join — the expected plan for the
-    * batch-vs-warehouse asymmetry (a daily batch's key set is MBs
+    * `broadcastKeys = true` (default) broadcasts the batch's KEY
+    * COLUMN into the anti join — the expected plan for the
+    * batch-vs-warehouse asymmetry (a daily batch's keys are MBs
     * while the target is the 100 TB side; the big side then streams
-    * with no shuffle). Pass false when a replayed mega-batch could
-    * blow the driver's broadcast limit and let AQE decide instead. */
+    * with no shuffle). The broadcast holds one key per batch ROW,
+    * repeats included, so its size follows the batch's row count, not
+    * its distinct keys. Pass false when a replayed mega-batch, or one
+    * heavy with repeated keys, could blow the driver's broadcast limit
+    * and let AQE decide instead. */
   def upsert(target: DataFrame, updates: DataFrame, key: String, ord: Column,
       tieBreakers: Seq[Column] = Seq.empty,
       broadcastKeys: Boolean = true): DataFrame = {
     val deduped = lastWriterWins(updates, key, ord, tieBreakers)
-    val keys = deduped.select(col(key))
+    // the batch's key set, read straight off `updates`: dedup keeps one
+    // row per key (null included), so the set equals the deduped one,
+    // and this branch shares no window with the union branch, which
+    // the optimizer would prune differently and shuffle a second time
+    val keys = updates.select(col(key))
     target.join(if (broadcastKeys) broadcast(keys) else keys, Seq(key), "left_anti")
       .unionByName(alignTo(deduped, target.schema))
   }

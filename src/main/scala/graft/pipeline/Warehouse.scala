@@ -924,34 +924,49 @@ object Warehouse {
 
   /** The hive partition columns of version `v`, whatever its kind:
     * a manifest version's persisted `_MANIFEST_PARTS`, a plain
-    * version's nested `k=` directory chain (walked, not listed per
-    * file — one getFileStatus per nesting level). Empty = flat. */
+    * version's nested `k=` directory chain ([[partitionWalk]]).
+    * Empty = flat. */
   private[graft] def partitionColsOf(spark: SparkSession, root: String,
       v: Long): Seq[String] = {
     val fs = Ingest.fs(spark, root)
     if (manifestOf(fs, root, v).isDefined) manifestParts(fs, root, v)
     else {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      var dir = new Path(dataPath(spark, root, v))
-      var descend = true
-      while (descend) {
-        val sub = fs.listStatus(dir).filter(s =>
-          s.isDirectory && s.getPath.getName.contains("=") &&
-            !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-        if (sub.isEmpty) descend = false
-        else {
-          val names = sub.map(_.getPath.getName.takeWhile(_ != '=')).distinct
-          require(names.length == 1,
-            s"partition layout of $root v$v mixes column dirs" +
-              s" (${names.mkString(", ")}) at one level")
-          buf += names.head
-          dir = sub.head.getPath
-        }
-      }
-      buf.toSeq
+      val dir = dataPath(spark, root, v)
+      partitionWalk(Ingest.fs(spark, dir), new Path(dir))._1
     }
   }
+
+  /** A plain version's nested `k=` directory chain under its data dir,
+    * walked, not listed per file (one listStatus per nesting level):
+    * the partition column names, outermost first, and the deepest dir
+    * the walk reached (a leaf partition dir, or the data dir itself
+    * when flat). `fs` is the data dir's own filesystem: a shallow
+    * clone's data dir may live under another root than the table's. */
+  private def partitionWalk(fs: FileSystem, dataDir: Path): (Seq[String], Path) = {
+    val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+    var dir = dataDir
+    var descend = true
+    while (descend) {
+      val sub = fs.listStatus(dir).filter(s =>
+        s.isDirectory && s.getPath.getName.contains("=") &&
+          !hiddenName(s.getPath.getName))
+      if (sub.isEmpty) descend = false
+      else {
+        val names = sub.map(_.getPath.getName.takeWhile(_ != '=')).distinct
+        require(names.length == 1,
+          s"partition layout of $dataDir mixes column dirs" +
+            s" (${names.mkString(", ")}) at one level")
+        buf += names.head
+        dir = sub.head.getPath
+      }
+    }
+    (buf.toSeq, dir)
+  }
+
+  /** The builtin hidden-path rule for one path segment: `_zonemap`
+    * sidecars, `_SUCCESS`, staging dirs, `.crc` files. */
+  private def hiddenName(name: String): Boolean =
+    name.startsWith("_") || name.startsWith(".")
 
   /** Recursive `*.parquet` listing under `dir`, excluding any file
     * with a `_`- or `.`-prefixed path segment relative to `dir` (the
@@ -966,8 +981,7 @@ object Warehouse {
       if (s.isFile && s.getPath.getName.endsWith(".parquet")) {
         val abs = fs.makeQualified(s.getPath).toString
         val hidden = abs.startsWith(dirQ + "/") &&
-          abs.stripPrefix(dirQ + "/").split("/")
-            .exists(seg => seg.startsWith("_") || seg.startsWith("."))
+          abs.stripPrefix(dirQ + "/").split("/").exists(hiddenName)
         if (!hidden) buf += s
       }
     }
@@ -1924,6 +1938,28 @@ object Warehouse {
   }
 
 
+  /** The column names a non-merging `spark.read.parquet` of plain
+    * version `v` infers, found on the driver with no Spark job: the
+    * hive partition columns ([[partitionWalk]]) plus the footer fields
+    * of the first data file in the deepest dir that walk reaches (one
+    * write produced every file of a plain snapshot, so any one footer
+    * is the snapshot's schema). A version with no data file there
+    * falls back to Spark's inference and its loud failure. */
+  private def dirFieldNames(spark: SparkSession, root: String, v: Long): Set[String] = {
+    val dir = dataPath(spark, root, v)
+    val fs = Ingest.fs(spark, dir)
+    val (partCols, leaf) = partitionWalk(fs, new Path(dir))
+    fs.listStatus(leaf)
+      .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet") &&
+        !hiddenName(s.getPath.getName))
+      .sortBy(_.getPath.getName).headOption match {
+      case None => spark.read.parquet(dir).schema.fieldNames.toSet
+      case Some(st) =>
+        graft.core.Tables.footerSchema(spark, st.getPath.toString)
+          .fieldNames.toSet ++ partCols
+    }
+  }
+
   /** Version `v` read under the `eraOf`-era LOGICAL schema — the read
     * every cross-version comparison must use:
     *  - the rename-map CHAIN between `v` and `eraOf` translated
@@ -1985,8 +2021,7 @@ object Warehouse {
     // the legal ADD-COLUMNS widening — reading a pre-widening version
     // under the widened schema null-fills the new columns BY CONTRACT
     // (diff/feeds across a widening boundary must keep working).
-    val onDisk = spark.read.parquet(dataPath(spark, root, v))
-      .schema.fieldNames.toSet
+    val onDisk = dirFieldNames(spark, root, v)
     val missing = phys.fieldNames.filterNot(onDisk.contains)
     if (missing.nonEmpty && (onDisk -- phys.fieldNames).nonEmpty)
       throw new IllegalStateException(

@@ -26,7 +26,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * builtin PartitioningUtils parse, minus its listing), and the base
   * class's partition pruning then drops whole partitions at planning
   * exactly as the builtin index would. `sizeInBytes` feeds the
-  * optimizer's stats from the same persisted numbers. */
+  * optimizer's stats from the same persisted numbers.
+  *
+  * Any fixed entry list serves: ingest plans its landing-CSV scan over
+  * the (path, size, mtime) its header check recorded, with no stats
+  * and no partitions. */
 private[graft] class ManifestFileIndex(spark: SparkSession, root: String,
     entries: Seq[(String, Long, Long)],
     stats: Map[String, Map[String, (Option[Any], Option[Any])]] = Map.empty,

@@ -41,11 +41,16 @@ object Bridge {
     * HadoopFsRelation + LogicalRelation is exactly what
     * `spark.read.parquet` builds, minus its InMemoryFileIndex listing
     * job. Partition columns (if any) are served from the index's
-    * partition spec, not from file contents. */
+    * partition spec, not from file contents. `format` and `options`
+    * are the reader's (parquet by default; ingest plans its landing
+    * CSVs through the same seam). */
   def ofFileIndex(spark: SparkSession,
       index: org.apache.spark.sql.execution.datasources.FileIndex,
       dataSchema: org.apache.spark.sql.types.StructType,
-      partitionSchema: org.apache.spark.sql.types.StructType): DataFrame = {
+      partitionSchema: org.apache.spark.sql.types.StructType,
+      format: org.apache.spark.sql.execution.datasources.FileFormat =
+        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
+      options: Map[String, String] = Map.empty): DataFrame = {
     val s = spark.asInstanceOf[ClassicSparkSession]
     // asNullable, exactly as DataFrameReader.schema() relaxes its
     // user-specified schema: files are allowed to MISS a (widened)
@@ -54,8 +59,7 @@ object Bridge {
     // constant-fold `col IS NULL` to false (silently wrong results)
     val rel = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
       index, partitionSchema.asNullable, dataSchema.asNullable, None,
-      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-      Map.empty[String, String])(s)
+      format, options)(s)
     ClassicDataset.ofRows(s,
       org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
   }

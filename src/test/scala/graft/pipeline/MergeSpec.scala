@@ -81,6 +81,44 @@ class MergeSpec extends AnyFunSuite {
     }
   }
 
+  test("upsert's anti-join key set off the raw batch equals the deduped formulation") {
+    // reference formulation: the anti join's key set taken from the
+    // DEDUPED batch. Dedup keeps one row per key, null included, so
+    // the raw batch's key column must name the same set
+    def dedupedKeysUpsert(t: DataFrame, u: DataFrame, broadcastKeys: Boolean) = {
+      val deduped = Merge.lastWriterWins(u, "k", col("processed_at"), Seq(col("v")))
+      val keys = deduped.select(col("k"))
+      t.join(if (broadcastKeys) broadcast(keys) else keys, Seq("k"), "left_anti")
+        .unionByName(deduped.select(t.columns.map(col).toSeq: _*))
+    }
+    def rowsOf(d: DataFrame) =
+      d.select(col("k"), unix_timestamp(col("processed_at")), col("v")).collect()
+        .map(r => (Option(r.getString(0)), r.getLong(1), r.getDouble(2))).sorted.toSeq
+    val rowGen = for {
+      k <- Gen.frequency(1 -> Gen.const(null: String), 6 -> Gen.oneOf((1 to 6).map(i => s"k$i")))
+      ord <- Gen.choose(1L, 20L)
+      v <- Gen.choose(0, 1000).map(_.toDouble)
+    } yield (k, ord, v)
+    val listGen = Gen.listOfN(12, rowGen)
+    (1 to 8).foreach { i =>
+      val tRows = listGen.apply(Gen.Parameters.default, Seed(i * 7L)).getOrElse(Nil)
+      val uRows = listGen.apply(Gen.Parameters.default, Seed(i * 7L + 1)).getOrElse(Nil)
+      assert(uRows.map(_._1).distinct.size < uRows.size, s"case $i: batch must repeat keys")
+      val t = df(tRows)
+      val u = df(uRows)
+      for (b <- Seq(true, false)) assert(
+        rowsOf(Merge.upsert(t, u, "k", col("processed_at"), Seq(col("v")), broadcastKeys = b)) ===
+          rowsOf(dedupedKeysUpsert(t, u, b)),
+        s"case $i, broadcastKeys=$b")
+    }
+    // a null key in the batch, with a null-keyed target row beside it
+    val t = df(Seq(("a", 1, 1.0), (null, 1, 2.0)))
+    val u = df(Seq((null, 5, 3.0), (null, 6, 4.0), ("a", 7, 5.0), ("a", 8, 6.0)))
+    for (b <- Seq(true, false)) assert(
+      rowsOf(Merge.upsert(t, u, "k", col("processed_at"), Seq(col("v")), broadcastKeys = b)) ===
+        rowsOf(dedupedKeysUpsert(t, u, b)))
+  }
+
   test("upsert follows reference semantics: the applied batch always overwrites") {
     // ON CONFLICT DO UPDATE ignores ord vs target — last APPLIED wins.
     val t = df(Seq(("a", 100, 1.0)))

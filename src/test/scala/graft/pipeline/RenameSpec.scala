@@ -151,6 +151,23 @@ class RenameSpec extends AnyFunSuite {
       "the renamed column must carry real values on both sides")
   }
 
+  test("diff under a schema the files cannot translate fails loudly, flat or partitioned") {
+    import org.apache.spark.sql.types.StructType
+    // no rename was ever committed: 'zone' is a foreign-era name, and
+    // the files carry the unclaimed 'region' (a partition column in
+    // the partitioned layout, where the name lives on the path)
+    val foreign = StructType(CocoaSchema.warehouse.fields.map(f =>
+      if (f.name == "region") f.copy(name = "zone") else f))
+    for (partitionBy <- Seq(Nil, Seq("region"))) {
+      val root = freshRoot()
+      Warehouse.commit(spark, root, batch(12), partitionBy = partitionBy)
+      Warehouse.commit(spark, root, batch(13), partitionBy = partitionBy)
+      val e = intercept[IllegalStateException](
+        Warehouse.diff(spark, root, 0L, 1L, schema = foreign))
+      assert(e.getMessage.contains("has no column(s) zone"), s"partitionBy=$partitionBy")
+    }
+  }
+
   test("a later commit writes logical names physically; its version carries no map") {
     val root = freshRoot()
     Warehouse.commit(spark, root, batch(5))

@@ -56,10 +56,10 @@ class SchemeSmokeSpec extends AnyFunSuite {
     assert(r.version === Some(0L))
     assert(Warehouse.read(spark, dirs.warehouse).count() === 100)
 
-    // second batch: >64 files forces the EXECUTOR-side header
-    // validation (driverHeaderCheckMax), proving the session conf —
-    // scheme bindings, credentials — actually ships to the tasks that
-    // open files there
+    // second batch: 70 files, above Spark's 32-path parallel-listing
+    // threshold, proving the driver-side header read and the
+    // fixed-entry CSV index, the only code that opens landing files
+    // for metadata, both resolve mock:// through the session conf
     CocoaGen.writeLandingFiles(spark, dirs.landing, 70, 2, seed = 10, idOffset = 80)
     CocoaPipeline.runBatch(spark, dirs, new Timestamp(1700000100000L))
     assert(Warehouse.currentVersion(spark, dirs.warehouse) === Some(1L))

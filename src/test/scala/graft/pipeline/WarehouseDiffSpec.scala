@@ -37,7 +37,11 @@ class WarehouseDiffSpec extends AnyFunSuite {
     assert(Warehouse.commit(spark, root, v0) === 0L)
     assert(Warehouse.commit(spark, root, v1) === 1L)
 
-    val diff = Warehouse.diff(spark, root, 0L, 1L)
+    // the rename guard reads each side's footer on the driver:
+    // planning the diff submits no Spark job
+    val (diff, planJobs) = org.apache.spark.grafttest.JobCount(spark)(
+      Warehouse.diff(spark, root, 0L, 1L))
+    assert(planJobs === 0, s"diff planning submitted $planJobs jobs")
     val rows = diff.collect().map(r =>
       r.getAs[String]("shipment_id") -> r.getAs[String]("change_type")).toMap
     assert(rows === Map(
